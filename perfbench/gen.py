@@ -1,206 +1,18 @@
-"""Seeded input generator for the benchmark.
+"""Seeded generator of the benchmark's nested betting tree.
 
-Two kinds of input, both a pure function of ``(seed, scale)``:
-
-- the ten catalog tables (TPC-H-ish star schema, an ``events`` stream
-  table and the LLM-data fixtures), written as one single-row-group
-  parquet file each with the physical types the engine reads;
-- the nested betting tree (tournaments → events → markets → lines →
-  selections) that the tree refresh operations feed through the REST
-  source.
-
-Value vocabularies and ranges follow the shape the catalog's queries
-filter and join on: uniform keys, five market segments, dates from
-1995 to 2001, ``{"k": N}`` JSON props, a 30-word document vocabulary
-with ~5% near-duplicate documents, and 64-dimensional unit embeddings
-with ten weakly separated labels.
+The tree (tournaments -> events -> markets -> lines -> selections, as
+``schemas.SPORT_EVENT`` records) is what the tree refresh operations
+feed through the REST source. It is a pure function of
+``(seed, tournaments, events_per_tournament)``. The catalog tables are
+not generated: they are the repository's test tables, copied under
+``perfbench/data``.
 """
 
 from __future__ import annotations
 
 import datetime
-import os
 
 import numpy as np
-import pyarrow as pa
-import pyarrow.parquet as pq
-
-_REGIONS = ("AFRICA", "AMERICA", "ASIA", "EUROPE", "MIDDLE EAST")
-_SEGMENTS = ("AUTOMOBILE", "BUILDING", "FURNITURE", "HOUSEHOLD", "MACHINERY")
-_PART_ADJ = ("small", "red", "blue", "hot", "old", "large", "new", "cold")
-_PART_NOUN = ("ring", "widget", "bolt", "gear", "gizmo", "plate", "anvil", "rod")
-_PART_TYPES = ("ECONOMY", "LARGE", "MEDIUM", "PROMO", "SMALL", "STANDARD")
-_PRIORITIES = ("1-URGENT", "2-HIGH", "3-MEDIUM", "4-NOT SPECIFIED", "5-LOW")
-_EVENT_TYPES = ("click", "error", "purchase", "signup", "view")
-_LANGS = ("en", "zh", "es", "de", "fr")
-_LANG_P = (0.44, 0.14, 0.14, 0.14, 0.14)
-_WORDS = (
-    "a", "agg", "batch", "big", "column", "customer", "data", "fast",
-    "filter", "group", "hash", "join", "key", "line", "merge", "order",
-    "part", "query", "row", "scan", "slow", "small", "sort", "spark",
-    "stream", "table", "the", "value", "vector", "window",
-)
-_EPOCH = datetime.datetime(1970, 1, 1)
-_US_PER_DAY = 86_400_000_000
-
-
-def _days_us(start: datetime.date, n_days: int, rng, size: int) -> np.ndarray:
-    base = (datetime.datetime.combine(start, datetime.time()) - _EPOCH).days
-    return (base + rng.integers(0, n_days, size)).astype(np.int64) * _US_PER_DAY
-
-
-def _ts(values: np.ndarray) -> pa.Array:
-    return pa.array(values, type=pa.timestamp("us"))
-
-
-def _money(rng, lo: float, hi: float, size: int) -> np.ndarray:
-    return np.round(rng.uniform(lo, hi, size), 2)
-
-
-def table_sizes(scale: float) -> dict[str, int]:
-    """Row counts per table at ``scale`` (1.0 = TPC-H sf1 proportions;
-    the document and embedding fixtures keep a 500-row floor)."""
-    return {
-        "region": 5,
-        "nation": 25,
-        "customer": max(10, int(150_000 * scale)),
-        "supplier": max(10, int(10_000 * scale)),
-        "part": max(10, int(200_000 * scale)),
-        "orders": max(10, int(1_500_000 * scale)),
-        "lineitem": max(10, int(6_000_000 * scale)),
-        "events": max(10, int(1_000_000 * scale)),
-        "documents": max(500, int(50_000 * scale)),
-        "embeddings": max(500, int(20_000 * scale)),
-    }
-
-
-def _documents(rng, n: int) -> pa.Table:
-    words = np.array(_WORDS)
-    texts: list[str] = []
-    for i in range(n):
-        if i >= 20 and rng.random() < 0.05:
-            # near-duplicate of an earlier document: same tokens plus a
-            # marker, so exact dedup keeps both and near-dup finds them
-            texts.append(texts[int(rng.integers(0, i))] + " dup")
-        else:
-            k = int(rng.integers(10, 100))
-            texts.append(" ".join(words[rng.integers(0, len(words), k)]))
-    ids = np.arange(n, dtype=np.int64)
-    return pa.table({
-        "doc_id": ids,
-        "text": texts,
-        "lang": np.array(_LANGS)[rng.choice(len(_LANGS), n, p=_LANG_P)],
-        "source": [f"src{i % 20}" for i in range(n)],
-        "n_chars": np.array([len(t) for t in texts], dtype=np.int64),
-    })
-
-
-def _embeddings(rng, n: int, dim: int = 64, labels: int = 10) -> pa.Table:
-    centroids = rng.normal(size=(labels, dim))
-    label = rng.integers(0, labels, n).astype(np.int32)
-    vecs = rng.normal(size=(n, dim)) + 0.15 * centroids[label]
-    vecs /= np.linalg.norm(vecs, axis=1, keepdims=True)
-    flat = pa.array(vecs.astype(np.float32).ravel(), type=pa.float32())
-    offsets = pa.array(np.arange(0, n * dim + 1, dim, dtype=np.int32))
-    return pa.table({
-        "vec_id": np.arange(n, dtype=np.int64),
-        "embedding": pa.ListArray.from_arrays(offsets, flat),
-        "label": label,
-    })
-
-
-def make_tables(seed: int, scale: float) -> dict[str, pa.Table]:
-    """All ten catalog tables for ``(seed, scale)`` as Arrow tables."""
-    rng = np.random.default_rng([seed, 1])
-    n = table_sizes(scale)
-    i32 = np.int32
-    out: dict[str, pa.Table] = {}
-    out["region"] = pa.table({
-        "r_regionkey": np.arange(5, dtype=i32), "r_name": list(_REGIONS),
-    })
-    out["nation"] = pa.table({
-        "n_nationkey": np.arange(25, dtype=i32),
-        "n_name": [f"NATION_{i}" for i in range(25)],
-        "n_regionkey": (np.arange(25) % 5).astype(i32),
-    })
-    c = n["customer"]
-    out["customer"] = pa.table({
-        "c_custkey": np.arange(c, dtype=np.int64),
-        "c_name": [f"Customer#{i:09d}" for i in range(c)],
-        "c_nationkey": rng.integers(0, 25, c).astype(i32),
-        "c_acctbal": _money(rng, -999.99, 9999.99, c),
-        "c_mktsegment": np.array(_SEGMENTS)[rng.integers(0, 5, c)],
-    })
-    s = n["supplier"]
-    out["supplier"] = pa.table({
-        "s_suppkey": np.arange(s, dtype=np.int64),
-        "s_name": [f"Supplier#{i:09d}" for i in range(s)],
-        "s_nationkey": rng.integers(0, 25, s).astype(i32),
-        "s_acctbal": _money(rng, -999.99, 9999.99, s),
-    })
-    p = n["part"]
-    adj = np.array(_PART_ADJ)[rng.integers(0, 8, p)]
-    noun = np.array(_PART_NOUN)[rng.integers(0, 8, p)]
-    out["part"] = pa.table({
-        "p_partkey": np.arange(p, dtype=np.int64),
-        "p_name": np.char.add(np.char.add(adj, " "), noun),
-        "p_brand": [f"Brand#{b}" for b in rng.integers(1, 26, p)],
-        "p_type": np.array(_PART_TYPES)[rng.integers(0, 6, p)],
-        "p_size": rng.integers(1, 51, p).astype(i32),
-        "p_retailprice": np.round(900 + (np.arange(p) % 1000) / 10, 1),
-    })
-    o = n["orders"]
-    out["orders"] = pa.table({
-        "o_orderkey": np.arange(o, dtype=np.int64),
-        "o_custkey": rng.integers(0, c, o).astype(np.int64),
-        "o_orderstatus": np.array(["F", "O", "P"])[rng.integers(0, 3, o)],
-        "o_totalprice": _money(rng, 1000, 500000, o),
-        "o_orderdate": _ts(_days_us(datetime.date(1995, 1, 1), 2404, rng, o)),
-        "o_orderpriority": np.array(_PRIORITIES)[rng.integers(0, 5, o)],
-    })
-    li = n["lineitem"]
-    out["lineitem"] = pa.table({
-        "l_orderkey": rng.integers(0, o, li).astype(np.int64),
-        "l_partkey": rng.integers(0, p, li).astype(np.int64),
-        "l_suppkey": rng.integers(0, s, li).astype(np.int64),
-        "l_linenumber": rng.integers(1, 8, li).astype(i32),
-        "l_quantity": rng.integers(1, 51, li).astype(np.float64),
-        "l_extendedprice": _money(rng, 900, 105000, li),
-        "l_discount": rng.integers(0, 11, li) / 100.0,
-        "l_tax": rng.integers(0, 9, li) / 100.0,
-        "l_returnflag": np.array(["A", "N", "R"])[rng.integers(0, 3, li)],
-        "l_linestatus": np.array(["F", "O"])[rng.integers(0, 2, li)],
-        "l_shipdate": _ts(_days_us(datetime.date(1995, 1, 2), 2499, rng, li)),
-    })
-    e = n["events"]
-    start_us = (datetime.datetime(2024, 1, 1) - _EPOCH).days * _US_PER_DAY
-    users = max(5, int(150_000 * scale))
-    out["events"] = pa.table({
-        "event_id": np.arange(e, dtype=np.int64),
-        "ts": _ts(np.sort(start_us + rng.integers(0, 30 * _US_PER_DAY, e))),
-        "user_id": rng.integers(0, users, e).astype(np.int64),
-        "event_type": np.array(_EVENT_TYPES)[rng.integers(0, 5, e)],
-        "value": np.maximum(0.01, np.round(rng.exponential(50.0, e), 2)),
-        "props": [f'{{"k": {k}}}' for k in rng.integers(0, 100, e)],
-    })
-    out["documents"] = _documents(rng, n["documents"])
-    out["embeddings"] = _embeddings(rng, n["embeddings"])
-    return out
-
-
-def write_tables(tables: dict[str, pa.Table], out_dir: str) -> None:
-    """One ``<name>.parquet`` per table, atomically (tmp + rename)."""
-    os.makedirs(out_dir, exist_ok=True)
-    for name, table in tables.items():
-        path = os.path.join(out_dir, f"{name}.parquet")
-        tmp = f"{path}.{os.getpid()}.tmp"
-        pq.write_table(table, tmp, row_group_size=len(table) + 1)
-        os.replace(tmp, path)
-
-
-# ---------------------------------------------------------------------------
-# Betting tree (schemas.SPORT_EVENT records)
-# ---------------------------------------------------------------------------
 
 _TEAMS = (
     ("Lakers", "LAL"), ("Celtics", "BOS"), ("Bulls", "CHI"), ("Heat", "MIA"),

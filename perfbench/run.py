@@ -1,15 +1,17 @@
 #!/usr/bin/env python3
 """Benchmark of the sports-betting analytics engine.
 
-    python3 perfbench/run.py --workload betting --seed 1 --seconds 6 --trace 0
+    python3 perfbench/run.py --workload betting_sql --seed 1 --seconds 10 --trace 0
 
 One process per run, ``local[<nproc>]``, a closed loop with one client:
 operations run one after another with no think time, the cache cleared
-before each. A run is: set-up (imports, session, first job), one cold
-pass whose results are collected and checked, one warming pass that is
-not measured, then warm passes with the noop action until ``--seconds``
-have been measured (at least ``MIN_WARM_PASSES``). The seed generates
-the inputs and shuffles the operation order of every pass.
+before each. A run is: set-up (session and first job), one cold pass
+whose results are collected and checked, one warming pass that is not
+measured, then warm passes with the noop action until ``--seconds``
+have been measured (at least ``MIN_WARM_PASSES``). The catalog tables
+are the repository's test tables under ``perfbench/data``; the seed
+generates the betting tree and shuffles the operation order of every
+pass.
 
 ``--trace 0`` prints the end-to-end metrics; ``--trace 1`` turns on job
 groups, the event log and a streaming listener and prints the per-layer
@@ -21,6 +23,7 @@ JSON; the full record, with the run context, is written under
 from __future__ import annotations
 
 import argparse
+import hashlib
 import json
 import os
 import random
@@ -34,9 +37,10 @@ import time
 HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(HERE)
 WORK = os.path.join(HERE, "work")
+DATA = os.path.join(HERE, "data")
 PACKAGE = "sports_betting_data_pipeline_spark"
 
-SCALE = 0.01  # default table scale; 1.0 = TPC-H sf1 row counts
+TABLES = "sf0.1"  # the tables under perfbench/data the workloads read
 # The first warm pass after the cold pass still runs 10-20% slower than
 # the later ones (JIT, caches), so it is run but not measured. Warm
 # passes keep speeding up for minutes, so runs compare only at an equal
@@ -45,14 +49,13 @@ SCALE = 0.01  # default table scale; 1.0 = TPC-H sf1 row counts
 WARMING_PASSES = 1
 MIN_WARM_PASSES = 4
 TAIL_BEYOND = 10  # samples the tail percentile must leave above it
-# At 1g, processes split into fast and slow ones. The heap is committed
-# up front (-Xms), otherwise peak RSS follows G1's heap-growth timing.
-DRIVER_MEMORY = "2g"
 
 END_TO_END_UNITS = {
     "setup_s": "s", "cold_pass_s": "s", "pass_s": "s", "query_p50_s": "s",
-    "query_tail_s": "s", "rows_per_s": "1/s", "peak_rss_mb": "MB",
+    "query_tail_s": "s", "heap_live_mb": "MB",
 }
+# Reported, and stored in the record, only by workloads with tree refreshes.
+REFRESH_UNITS = {"rows_per_s": "1/s"}
 
 
 def _cpus() -> int:
@@ -90,6 +93,25 @@ def _vm_hwm_mb(pid: int | str) -> float:
     return 0.0
 
 
+def heap_live_mb(spark) -> float:
+    """What the run left reachable on the driver heap (memory-sink
+    tables, listeners, status stores): heap in use after full
+    collections. The last operation's frames are released first (Python
+    proxies, then the broadcasts that Spark's cleaner drops once their
+    owners are collected), so the figure does not depend on which
+    operation ran last."""
+    import gc
+
+    gc.collect()
+    spark.catalog.clearCache()
+    system = spark.sparkContext._jvm.java.lang.System
+    for _ in range(3):
+        system.gc()
+        time.sleep(0.2)
+    mem = spark.sparkContext._jvm.java.lang.management.ManagementFactory.getMemoryMXBean()
+    return mem.getHeapMemoryUsage().getUsed() / (1024.0 * 1024.0)
+
+
 def _git_commit() -> str | None:
     try:
         out = subprocess.run(
@@ -101,19 +123,29 @@ def _git_commit() -> str | None:
     return out.stdout.strip() or None
 
 
-class Inputs:
-    """Generated inputs of one seed, cached under ``work/inputs``."""
+def verify_tables(sf_dir: str) -> str:
+    """Check every table under ``sf_dir`` against its ``SHA256SUMS``;
+    return the digest of that manifest, which names the input."""
+    with open(os.path.join(sf_dir, "SHA256SUMS"), "rb") as fh:
+        manifest = fh.read()
+    for line in manifest.decode().splitlines():
+        digest, name = line.split()
+        with open(os.path.join(sf_dir, name), "rb") as fh:
+            if hashlib.sha256(fh.read()).hexdigest() != digest:
+                raise ValueError(f"{sf_dir}/{name} does not match SHA256SUMS")
+    return hashlib.sha256(manifest).hexdigest()
 
-    def __init__(self, seed: int, workload, scale: float) -> None:
+
+class Inputs:
+    """The inputs of one run: the test tables and the seeded tree."""
+
+    def __init__(self, seed: int, workload, tables: str, tree_events: int | None) -> None:
         import gen
 
-        self.sf_dir = os.path.join(WORK, "inputs", f"s{seed}-x{scale}")
-        if not os.path.isfile(os.path.join(self.sf_dir, "DONE")):
-            gen.write_tables(gen.make_tables(seed, scale), self.sf_dir)
-            with open(os.path.join(self.sf_dir, "DONE"), "w") as fh:
-                fh.write("ok\n")
-        self.table_rows = gen.table_sizes(scale)
-        self.events_per_refresh = max(5, round(workload.events_per_refresh * scale / SCALE))
+        self.tables = tables
+        self.sf_dir = os.path.join(DATA, tables)
+        self.tables_sha256 = verify_tables(self.sf_dir)
+        self.events_per_refresh = tree_events or workload.events_per_refresh
         self.tree = gen.make_tree(seed, workload.refreshes, self.events_per_refresh)
         self.tree_rows = sum(gen.tree_rows(t) for t in self.tree)
         self.spool_dir = os.path.join(WORK, "spool", str(os.getpid()))
@@ -133,7 +165,6 @@ def _prepare_environment() -> None:
     os.environ["TMPDIR"] = tmp
     os.environ["SPARK_LOCAL_DIRS"] = os.path.join(WORK, "spark-local")
     os.environ["SPARK_GRAFT_CPUS"] = str(_cpus())
-    os.environ["SPARK_GRAFT_DRIVER_MEM"] = DRIVER_MEMORY
     if ROOT not in sys.path:
         sys.path.insert(0, ROOT)
     if HERE not in sys.path:
@@ -162,12 +193,10 @@ class Runner:
 
         self.workload = workloads.WORKLOADS[self.args.workload]
         self.ops = workloads.operations(self.args.workload)
-        t0 = time.perf_counter()
-        self.inputs = Inputs(self.args.seed, self.workload, self.args.scale)
-        self.gen_s = time.perf_counter() - t0
+        self.inputs = Inputs(self.args.seed, self.workload, self.args.tables, self.args.tree_events)
 
         cpus = _cpus()
-        java_opts = f"-Xms{DRIVER_MEMORY} -Djava.io.tmpdir={os.environ['TMPDIR']} -XX:-UsePerfData"
+        java_opts = f"-Djava.io.tmpdir={os.environ['TMPDIR']} -XX:-UsePerfData"
         conf = {
             "spark.ui.showConsoleProgress": "false",
             "spark.sql.warehouse.dir": os.path.join(WORK, "warehouse"),
@@ -178,15 +207,18 @@ class Runner:
             os.makedirs(self.event_dir, exist_ok=True)
             conf.update(tracing.EVENT_LOG_CONF)
             conf["spark.eventLog.dir"] = "file:" + self.event_dir
-        self.spark = get_spark(
+        t0 = time.perf_counter()
+        spark = get_spark(
             app_name=f"perfbench-{self.args.workload}",
             master=f"local[{cpus}]",
             shuffle_partitions=cpus,
             extra_conf=conf,
         )
-        self.spark.sparkContext.setLogLevel("ERROR")
-        self.spark.range(1).count()  # the engine's first job
-        self.setup_s = _since_process_start() - self.gen_s
+        self.session_s = time.perf_counter() - t0
+        spark.sparkContext.setLogLevel("ERROR")
+        spark.range(1).count()  # the engine's first job
+        self.setup_s = time.perf_counter() - t0
+        self.spark = spark
         if self.args.trace:
             self.phases = tracing.PhaseLog()
             self.spark.streams.addListener(tracing.ProgressListener(self.phases))
@@ -235,8 +267,12 @@ class Runner:
         self.records.append(rec)
 
     def run_pass(self, pass_no: int, rng: random.Random) -> float:
+        """Run every operation once. The cold pass keeps the workload's
+        order, so the operation that absorbs the first-use cost is the
+        same in every run; later passes are shuffled by the seed."""
         order = list(self.ops)
-        rng.shuffle(order)
+        if pass_no > 0:
+            rng.shuffle(order)
         t0 = time.perf_counter()
         for op in order:
             self.run_op(op, pass_no, collect=pass_no == 0)
@@ -282,7 +318,12 @@ class Runner:
         sc = self.spark.sparkContext
         gateway = SparkContext._gateway
         jvm_pid = gateway.proc.pid
-        self.peak_rss_mb = _vm_hwm_mb(jvm_pid) + resource.getrusage(resource.RUSAGE_SELF).ru_maxrss / 1024.0
+        self.jvm_rss_mb = _vm_hwm_mb(jvm_pid)
+        self.python_rss_mb = resource.getrusage(resource.RUSAGE_SELF).ru_maxrss / 1024.0
+        self.peak_rss_mb = self.jvm_rss_mb + self.python_rss_mb
+        mem = sc._jvm.java.lang.management.ManagementFactory.getMemoryMXBean()
+        self.heap_committed_mb = mem.getHeapMemoryUsage().getCommitted() / (1024.0 * 1024.0)
+        self.heap_live_mb = heap_live_mb(self.spark)
         self.app_id = sc.applicationId
         self.shuffle_partitions = int(self.spark.conf.get("spark.sql.shuffle.partitions"))
         self.pyspark_version = sc.version
@@ -307,16 +348,19 @@ class Runner:
         warm = [r for r in self._ok() if r["pass"] in self.measured]
         passes = [sum(r["latency_s"] for r in warm if r["pass"] == p) for p in self.measured]
         latencies = [r["latency_s"] for r in warm]
-        pass_s = statistics.median(passes)
         return {
             "setup_s": self.setup_s,
             "cold_pass_s": sum(r["latency_s"] for r in self._ok(0)),
-            "pass_s": pass_s,
+            "pass_s": statistics.median(passes),
             "query_p50_s": percentile(latencies, 50),
             "query_tail_s": percentile(latencies, self.tail_pct),
-            "rows_per_s": sum(self.rows.values()) / pass_s,
-            "peak_rss_mb": self.peak_rss_mb,
+            "heap_live_mb": self.heap_live_mb,
         }
+
+    def refresh_metrics(self) -> dict[str, float]:
+        if not self.workload.refreshes:
+            return {}
+        return {"rows_per_s": rows_per_s(self._ok(), self.measured)}
 
     def per_layer(self) -> dict[str, float]:
         import tracing
@@ -325,10 +369,12 @@ class Runner:
         with open(path) as fh:
             counters = tracing.parse_event_log(fh, self.phases)
         os.remove(path)
-        return layer_metrics(
+        metrics = layer_metrics(
             self.records, counters, self.phases, self.sink_tables,
             self.measured, _cpus(),
         )
+        metrics["driver.peak_rss_mb"] = self.peak_rss_mb
+        return metrics
 
     def context(self) -> dict:
         return {
@@ -338,7 +384,7 @@ class Runner:
             "cpus": _cpus(),
             "nproc": os.cpu_count(),
             "master": f"local[{_cpus()}]",
-            "input": {"scale": self.args.scale, "table_rows": self.inputs.table_rows},
+            "input": {"tables": self.inputs.tables, "sha256": self.inputs.tables_sha256},
             "tree": {
                 "refreshes": self.workload.refreshes,
                 "events_per_refresh": self.inputs.events_per_refresh,
@@ -350,6 +396,17 @@ class Runner:
             "seconds": self.args.seconds,
             "ops": [op.name for op in self.ops],
         }
+
+
+def rows_per_s(records: list[dict], passes: list[int]) -> float:
+    """Sheet rows landed per second of tree refresh (source -> flatten
+    -> sink), median over ``passes``."""
+    per_pass = []
+    for p in passes:
+        recs = [r for r in records if r["pass"] == p and r["op"].startswith("refresh_")]
+        rows = sum(r["counts"]["sinks.rows"] for r in recs)
+        per_pass.append(rows / sum(r["latency_s"] for r in recs))
+    return statistics.median(per_pass)
 
 
 def layer_metrics(records, counters, phases, sink_tables, passes, cpus) -> dict[str, float]:
@@ -431,7 +488,7 @@ def layer_metrics(records, counters, phases, sink_tables, passes, cpus) -> dict[
 
 
 LAYER_UNITS = {
-    "_s": "s", "_b": "B", "bytes": "B", "_bytes_sent": "B", "_bytes_returned": "B",
+    "_s": "s", "_mb": "MB", "_b": "B", "bytes": "B", "_bytes_sent": "B", "_bytes_returned": "B",
     "task_skew": "ratio", "core_util": "ratio",
 }
 
@@ -449,8 +506,10 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--seed", type=int, required=True)
     ap.add_argument("--seconds", type=float, required=True)
     ap.add_argument("--trace", type=int, choices=(0, 1), default=0)
-    ap.add_argument("--scale", type=float, default=SCALE,
-                    help="table scale (tree size scales with it); the self-test smokes 0.001")
+    ap.add_argument("--tables", default=TABLES,
+                    help="table set under perfbench/data; the self-test smokes sf0.001")
+    ap.add_argument("--tree-events", type=int, default=None,
+                    help="events per tree refresh (default: the workload's)")
     args = ap.parse_args(argv)
     if not os.path.isdir(os.path.join(ROOT, PACKAGE)):
         print(f"perfbench: no {PACKAGE}/ beside perfbench/ in {ROOT}", file=sys.stderr)
@@ -472,12 +531,13 @@ def main(argv: list[str] | None = None) -> int:
     runner.check_outputs()
     metrics = runner.per_layer() if args.trace else runner.end_to_end()
     units = {m: (layer_unit(m) if args.trace else END_TO_END_UNITS[m]) for m in metrics}
+    refresh = {} if args.trace else runner.refresh_metrics()
     attempted = len(runner.records)
     failed = sum(1 for r in runner.records if "error" in r or r.get("check") is False)
     record = {
         "context": runner.context(),
-        "metrics": metrics,
-        "units": units,
+        "metrics": {**metrics, **refresh},
+        "units": {**units, **{m: REFRESH_UNITS[m] for m in refresh}},
         "attempted": attempted,
         "failed": failed,
         "failed_frac": failed / attempted,
@@ -486,8 +546,12 @@ def main(argv: list[str] | None = None) -> int:
         "tail_samples": sum(1 for r in runner._ok() if r["pass"] in runner.measured),
         "measured_passes": runner.measured,
         "measured_s": runner.measured_s,
-        "gen_s": runner.gen_s,
         "check_s": runner.check_s,
+        "setup_session_s": runner.session_s,
+        "memory_mb": {
+            "jvm_peak_rss": runner.jvm_rss_mb, "python_peak_rss": runner.python_rss_mb,
+            "heap_live": runner.heap_live_mb, "heap_committed": runner.heap_committed_mb,
+        },
         "run_s": _since_process_start(),
         "rows": runner.rows,
         "operations": runner.records,
@@ -497,8 +561,8 @@ def main(argv: list[str] | None = None) -> int:
     out_path = os.path.join(out_dir, f"{args.workload}-s{args.seed}-t{args.trace}.json")
     with open(out_path, "w") as fh:
         json.dump(record, fh, indent=1)
-    for name, value in metrics.items():
-        print(f"{name:32s} {value:16.6f} {units[name]}")
+    for name, value in record["metrics"].items():
+        print(f"{name:32s} {value:16.6f} {record['units'][name]}")
     print(f"failed_frac {record['failed_frac']:.4f} ({failed}/{attempted}); "
           f"{len(runner.measured)} measured passes; record -> {os.path.relpath(out_path, ROOT)}")
     for name, why in runner.failures.items():

@@ -99,12 +99,43 @@ def test_tail_percentile_leaves_ten_samples_above():
     assert run.percentile([3.0, 1.0, 2.0], 50) == 2.0
 
 
-def test_generator_is_a_function_of_the_seed():
-    a, b, c = gen.make_tables(7, 0.001), gen.make_tables(7, 0.001), gen.make_tables(8, 0.001)
-    assert all(a[t].equals(b[t]) for t in check.TABLES)
-    assert not a["lineitem"].equals(c["lineitem"])
-    assert {t: a[t].num_rows for t in check.TABLES} == gen.table_sizes(0.001)
+def test_tree_is_a_function_of_the_seed():
     assert gen.make_tree(7, 2, 30) == gen.make_tree(7, 2, 30) != gen.make_tree(8, 2, 30)
+
+
+@pytest.mark.parametrize("tables", ["sf0.1", "sf0.001"])
+def test_tables_match_their_manifest(tables, tmp_path):
+    import shutil
+
+    import run
+
+    src = os.path.join(BENCH, "data", tables)
+    with open(os.path.join(src, "SHA256SUMS")) as fh:
+        names = {line.split()[1] for line in fh}
+    assert names == {f"{t}.parquet" for t in check.TABLES}
+    digest = run.verify_tables(src)
+    dst = tmp_path / tables
+    shutil.copytree(src, dst)
+    assert run.verify_tables(str(dst)) == digest
+    with open(dst / "region.parquet", "r+b") as fh:
+        fh.seek(100)
+        byte = fh.read(1)
+        fh.seek(100)
+        fh.write(bytes([byte[0] ^ 1]))
+    with pytest.raises(ValueError, match="region.parquet"):
+        run.verify_tables(str(dst))
+
+
+def test_rows_per_s_counts_only_refresh_time():
+    import run
+
+    records = [
+        {"op": "q", "pass": p, "latency_s": 5.0, "counts": {}} for p in (1, 2, 3)
+    ] + [
+        {"op": "refresh_t0", "pass": p, "latency_s": s, "counts": {"sinks.rows": 100}}
+        for p, s in ((1, 1.0), (2, 2.0), (3, 4.0))
+    ]
+    assert run.rows_per_s(records, [1, 2, 3]) == pytest.approx(50.0)
 
 
 def _reflatten(records) -> list[list[str]]:
@@ -118,11 +149,10 @@ def test_tree_row_count_matches_the_independent_reflatten():
         assert len(_reflatten(records)) == gen.tree_rows(records)
 
 
-def test_refresh_check_rejects_changed_or_missing_cells(tmp_path):
+def test_refresh_check_rejects_changed_or_missing_cells():
     from sports_betting_data_pipeline_spark.plans import ORACLES
 
-    gen.write_tables(gen.make_tables(1, 0.001), str(tmp_path))
-    checker = check.Checker(ROOT, str(tmp_path), ORACLES)
+    checker = check.Checker(ROOT, os.path.join(BENCH, "data", "sf0.001"), ORACLES)
     records = gen.make_tree(1, 1, 20)[0]
     rows = _reflatten(records)
     assert checker.refresh(records, rows) == (True, "")
@@ -135,8 +165,8 @@ def test_refresh_check_rejects_changed_or_missing_cells(tmp_path):
 
 def _record(**context) -> dict:
     base = {
-        "workload": "betting", "seed": 1, "trace": 0, "cpus": 4, "nproc": 4,
-        "master": "local[4]", "input": {"scale": 0.01}, "tree": {"rows": 10},
+        "workload": "betting_sql", "seed": 1, "trace": 0, "cpus": 4, "nproc": 4,
+        "master": "local[4]", "input": {"tables": "sf0.1", "sha256": "x"}, "tree": {"rows": 10},
         "shuffle_partitions": 4, "pyspark": "4.1.2", "seconds": 12, "ops": ["a"],
         "git_commit": "x",
     }
@@ -187,7 +217,8 @@ def test_smoke_run_prints_every_metric_with_its_unit(workload, trace):
     spec = _benchmark_spec()
     out = subprocess.run(
         [sys.executable, os.path.join(BENCH, "run.py"), "--workload", workload,
-         "--seed", "5", "--seconds", "0", "--trace", str(trace), "--scale", "0.001"],
+         "--seed", "5", "--seconds", "0", "--trace", str(trace),
+         "--tables", "sf0.001", "--tree-events", "20"],
         cwd=ROOT, capture_output=True, text=True, timeout=600,
     )
     assert out.returncode == 0, out.stderr[-3000:]
@@ -200,3 +231,9 @@ def test_smoke_run_prints_every_metric_with_its_unit(workload, trace):
         assert f"{m['name']} " in out.stdout
     if not trace:
         assert all(v["value"] > 0 for v in result["metrics"].values())
+        with open(os.path.join(BENCH, "work", "results", f"{workload}-s5-t0.json")) as fh:
+            record = json.load(fh)
+        has_refresh = any(op.startswith("refresh_") for op in record["context"]["ops"])
+        assert ("rows_per_s" in record["metrics"]) == has_refresh
+        if has_refresh:
+            assert record["metrics"]["rows_per_s"] > 0 and "rows_per_s " in out.stdout

@@ -11,8 +11,9 @@ An operation has two timed phases, called from outside the program:
   ``sinks.sheets.sheet_append`` for a tree refresh.
 
 Each workload is a fixed subset of the catalog, sized so that one warm
-pass takes about five seconds at 4 cores and a run fits the benchmark's
-time budget (see README.md for why each subset was chosen).
+pass takes about five seconds at 4 cores on the ``sf0.1`` tables and a
+run fits the benchmark's time budget (see README.md for why each subset
+was chosen).
 """
 
 from __future__ import annotations
@@ -38,30 +39,28 @@ class Workload:
 
 
 WORKLOADS = {
-    # Execution-bound: the reference's filter, join, odds and wager
-    # surface, TPC-H-shaped relational work, and the paper's own
-    # pipeline (REST tree snapshot -> flatten -> sheet). Builders run no
-    # jobs; no Arrow/Python UDF nodes and no streaming, so it is the
-    # control for plan-construction, Python-worker and streaming changes.
-    "betting": Workload(
+    # Execution-bound SQL: the paper's two-branch union (p03), the reference's
+    # filter, join, odds and wager surface, and TPC-H-shaped relational
+    # work. Builders run no jobs; no Python workers, no streaming, no
+    # source or sink. The control for Python-worker, streaming and
+    # source/sink changes.
+    "betting_sql": Workload(queries=(
+        "p03_two_branch_union", "f01_whitelist_filter", "o03_implied_probability",
+        "wg02_cancel_anti_join", "j01_enrichment_join",
+        "q03_local_supplier_volume", "q17_nation_trade_volume",
+    )),
+    # The ingest side: the paper's tree refresh (REST source -> flatten
+    # -> sheet sink, whose append runs Python workers), streaming drains
+    # that run inside their builders (state store and checkpoint logs in
+    # st01, the lake landing in st14), and Arrow/Python UDFs (l16, m01).
+    "ingest_llm": Workload(
         queries=(
-            "f01_whitelist_filter", "j01_enrichment_join",
-            "o03_implied_probability", "wg04_balances",
-            "q01_pricing_summary", "q03_local_supplier_volume",
+            "l16_grouped_zscore", "m01_multimodal_features",
+            "st01_tumbling_window", "st14_stream_lake_landing",
         ),
         refreshes=1,
-        events_per_refresh=200,
+        events_per_refresh=400,
     ),
-    # Construction-bound: an LLM-data builder that runs jobs while
-    # building (dedup survivorship), Arrow/Python workers (grouped
-    # z-score), and streaming
-    # drains, which run inside their builders (state-store commits,
-    # checkpoint logs, the lake landing). No sources or sinks, so it is
-    # the control for the tree refresh path.
-    "corpus_stream": Workload(queries=(
-        "l16_grouped_zscore", "l55_dedup_survivorship",
-        "st01_tumbling_window", "st14_stream_lake_landing",
-    )),
 }
 
 
