@@ -8,7 +8,7 @@ operations run one after another with no think time, the cache cleared
 before each. A run is: set-up (session and first job), one cold pass
 whose results are collected and checked, one warming pass that is not
 measured, then warm passes with the noop action until ``--seconds``
-have been measured (at least ``MIN_WARM_PASSES``). The catalog tables
+have been measured (at least the workload's ``measured_passes``). The catalog tables
 are the repository's test tables under ``perfbench/data``; the seed
 generates the betting tree and shuffles the operation order of every
 pass.
@@ -40,14 +40,12 @@ WORK = os.path.join(HERE, "work")
 DATA = os.path.join(HERE, "data")
 PACKAGE = "sports_betting_data_pipeline_spark"
 
-TABLES = "sf0.1"  # the tables under perfbench/data the workloads read
+# Tables under perfbench/data, and events per tree refresh, of a smoke
+# run (the self-test); a real run reads sf0.1 and the workload's tree.
+SMOKE_TABLES, SMOKE_TREE_EVENTS = "sf0.001", 20
 # The first warm pass after the cold pass still runs 10-20% slower than
-# the later ones (JIT, caches), so it is run but not measured. Warm
-# passes keep speeding up for minutes, so runs compare only at an equal
-# number of measured passes: --seconds is a floor that BENCHMARK.json
-# sets below what MIN_WARM_PASSES take.
+# the later ones (JIT, caches), so it is run but not measured.
 WARMING_PASSES = 1
-MIN_WARM_PASSES = 4
 TAIL_BEYOND = 10  # samples the tail percentile must leave above it
 
 END_TO_END_UNITS = {
@@ -139,13 +137,13 @@ def verify_tables(sf_dir: str) -> str:
 class Inputs:
     """The inputs of one run: the test tables and the seeded tree."""
 
-    def __init__(self, seed: int, workload, tables: str, tree_events: int | None) -> None:
+    def __init__(self, seed: int, workload, smoke: bool) -> None:
         import gen
 
-        self.tables = tables
-        self.sf_dir = os.path.join(DATA, tables)
+        self.tables = SMOKE_TABLES if smoke else "sf0.1"
+        self.sf_dir = os.path.join(DATA, self.tables)
         self.tables_sha256 = verify_tables(self.sf_dir)
-        self.events_per_refresh = tree_events or workload.events_per_refresh
+        self.events_per_refresh = SMOKE_TREE_EVENTS if smoke else workload.events_per_refresh
         self.tree = gen.make_tree(seed, workload.refreshes, self.events_per_refresh)
         self.tree_rows = sum(gen.tree_rows(t) for t in self.tree)
         self.spool_dir = os.path.join(WORK, "spool", str(os.getpid()))
@@ -193,7 +191,7 @@ class Runner:
 
         self.workload = workloads.WORKLOADS[self.args.workload]
         self.ops = workloads.operations(self.args.workload)
-        self.inputs = Inputs(self.args.seed, self.workload, self.args.tables, self.args.tree_events)
+        self.inputs = Inputs(self.args.seed, self.workload, self.args.smoke)
 
         cpus = _cpus()
         java_opts = f"-Djava.io.tmpdir={os.environ['TMPDIR']} -XX:-UsePerfData"
@@ -286,7 +284,7 @@ class Runner:
             self.run_pass(pass_no, rng)
         self.measured: list[int] = []
         self.measured_s = 0.0
-        while len(self.measured) < MIN_WARM_PASSES or self.measured_s < self.args.seconds:
+        while len(self.measured) < self.workload.measured_passes or self.measured_s < self.args.seconds:
             pass_no = 1 + WARMING_PASSES + len(self.measured)
             self.measured_s += self.run_pass(pass_no, rng)
             self.measured.append(pass_no)
@@ -344,7 +342,7 @@ class Runner:
         ]
 
     def end_to_end(self) -> dict[str, float]:
-        self.tail_pct = tail_percentile(len(self.ops) * MIN_WARM_PASSES)
+        self.tail_pct = tail_percentile(len(self.ops) * self.workload.measured_passes)
         warm = [r for r in self._ok() if r["pass"] in self.measured]
         passes = [sum(r["latency_s"] for r in warm if r["pass"] == p) for p in self.measured]
         latencies = [r["latency_s"] for r in warm]
@@ -506,10 +504,8 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--seed", type=int, required=True)
     ap.add_argument("--seconds", type=float, required=True)
     ap.add_argument("--trace", type=int, choices=(0, 1), default=0)
-    ap.add_argument("--tables", default=TABLES,
-                    help="table set under perfbench/data; the self-test smokes sf0.001")
-    ap.add_argument("--tree-events", type=int, default=None,
-                    help="events per tree refresh (default: the workload's)")
+    ap.add_argument("--smoke", action="store_true",
+                    help=f"read the {SMOKE_TABLES} tables and a {SMOKE_TREE_EVENTS}-event tree (self-test)")
     args = ap.parse_args(argv)
     if not os.path.isdir(os.path.join(ROOT, PACKAGE)):
         print(f"perfbench: no {PACKAGE}/ beside perfbench/ in {ROOT}", file=sys.stderr)

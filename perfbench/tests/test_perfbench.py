@@ -217,8 +217,7 @@ def test_smoke_run_prints_every_metric_with_its_unit(workload, trace):
     spec = _benchmark_spec()
     out = subprocess.run(
         [sys.executable, os.path.join(BENCH, "run.py"), "--workload", workload,
-         "--seed", "5", "--seconds", "0", "--trace", str(trace),
-         "--tables", "sf0.001", "--tree-events", "20"],
+         "--seed", "5", "--seconds", "0", "--trace", str(trace), "--smoke"],
         cwd=ROOT, capture_output=True, text=True, timeout=600,
     )
     assert out.returncode == 0, out.stderr[-3000:]
