@@ -1,7 +1,7 @@
 """Output checks: every operation is checked once per run, untimed.
 
 - Catalog queries with a DuckDB oracle: the oracle SQL runs over the
-  same generated parquet tables and the result is compared by row
+  same parquet tables and the result is compared by row
   count, column set and order-insensitive values, with
   ``scripts/verify_driver.py``'s ``norm`` / ``frames_match``.
 - Rows-only catalog queries (no oracle): a nonzero row count.
