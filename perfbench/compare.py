@@ -13,14 +13,15 @@ For two records of the same kind it prints each metric of both and the
 relative change. For an untraced and a traced record of the same seed
 it prints the tracing overhead: traced ``trace.pass_s`` minus untraced
 ``pass_s``, and per operation the traced construct + exec seconds
-against the untraced latency (medians over warm passes).
+against the untraced latency (each operation's best warm latency).
 """
 
 from __future__ import annotations
 
 import json
-import statistics
 import sys
+
+from run import op_best
 
 CONTEXT_KEYS = (
     "workload", "seed", "cpus", "nproc", "master", "input", "tree",
@@ -34,18 +35,9 @@ def mismatches(a: dict, b: dict) -> list[str]:
     return [k for k in CONTEXT_KEYS if ca.get(k) != cb.get(k)]
 
 
-def op_medians(record: dict) -> dict[str, float]:
-    """Median warm latency (construct + exec) per operation."""
-    by_op: dict[str, list[float]] = {}
-    for r in record["operations"]:
-        if r["pass"] in record["measured_passes"] and "error" not in r:
-            by_op.setdefault(r["op"], []).append(r["construct_s"] + r["exec_s"])
-    return {op: statistics.median(v) for op, v in by_op.items()}
-
-
 def tracing_overhead(untraced: dict, traced: dict) -> dict:
-    base = op_medians(untraced)
-    with_trace = op_medians(traced)
+    base = op_best(untraced["operations"], untraced["measured_passes"])
+    with_trace = op_best(traced["operations"], traced["measured_passes"])
     return {
         "pass_s": traced["metrics"]["trace.pass_s"] - untraced["metrics"]["pass_s"],
         "ops": {op: with_trace[op] - base[op] for op in base if op in with_trace},

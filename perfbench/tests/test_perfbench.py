@@ -130,12 +130,13 @@ def test_rows_per_s_counts_only_refresh_time():
     import run
 
     records = [
-        {"op": "q", "pass": p, "latency_s": 5.0, "counts": {}} for p in (1, 2, 3)
+        {"op": "q", "pass": p, "construct_s": 0.1, "exec_s": 5.0, "counts": {}} for p in (1, 2, 3)
     ] + [
-        {"op": "refresh_t0", "pass": p, "latency_s": s, "counts": {"sinks.rows": 100}}
-        for p, s in ((1, 1.0), (2, 2.0), (3, 4.0))
+        {"op": "refresh_t0", "pass": p, "construct_s": 0.5, "exec_s": s, "counts": {"sinks.rows": 100}}
+        for p, s in ((1, 1.5), (2, 1.5), (3, 0.5))
     ]
-    assert run.rows_per_s(records, [1, 2, 3]) == pytest.approx(50.0)
+    assert run.rows_per_s(records, [1, 2, 3]) == pytest.approx(100.0)
+    assert run.rows_per_s(records, [1, 2]) == pytest.approx(50.0)
 
 
 def _reflatten(records) -> list[list[str]]:
@@ -236,3 +237,17 @@ def test_smoke_run_prints_every_metric_with_its_unit(workload, trace):
         assert ("rows_per_s" in record["metrics"]) == has_refresh
         if has_refresh:
             assert record["metrics"]["rows_per_s"] > 0 and "rows_per_s " in out.stdout
+
+
+def test_op_best_takes_each_operation_fastest_sample():
+    import run
+
+    records = [
+        {"op": op, "pass": p, "construct_s": 0.1, "exec_s": s}
+        for op, series in (("a", (1.0, 3.0, 1.2)), ("b", (2.0, 2.2, 9.0)))
+        for p, s in zip((1, 2, 3), series)
+    ] + [
+        {"op": "a", "pass": 0, "construct_s": 0.0, "exec_s": 0.1},
+        {"op": "b", "pass": 2, "error": "ValueError: x"},
+    ]
+    assert run.op_best(records, [1, 2, 3]) == pytest.approx({"a": 1.1, "b": 2.1})

@@ -39,7 +39,7 @@ class Workload:
     # Measured passes. Warm passes keep speeding up for minutes, so runs
     # compare only at an equal count: --seconds is a floor that
     # BENCHMARK.json sets below what these passes take.
-    measured_passes: int = 4
+    measured_passes: int = 5
 
 
 WORKLOADS = {
@@ -64,9 +64,8 @@ WORKLOADS = {
         ),
         refreshes=1,
         events_per_refresh=400,
-        # Three passes keep a run inside the time budget; 5 operations x 3
-        # still put the median mid-way through one operation's samples.
-        measured_passes=3,
+        # Four passes keep a run inside the time budget.
+        measured_passes=4,
     ),
 }
 
