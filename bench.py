@@ -30,24 +30,20 @@ import re
 import sys
 import time
 
+import pyspark
+
 _REPO_DIR = os.path.dirname(os.path.abspath(__file__))
 if _REPO_DIR not in sys.path:
     sys.path.insert(0, _REPO_DIR)
 
 from sports_betting_data_pipeline_spark.plans import QUERIES  # noqa: E402
+from sports_betting_data_pipeline_spark.plans.catalog import AUDIT_TWINS  # noqa: E402
 from sports_betting_data_pipeline_spark.session import get_spark  # noqa: E402
 
 
 def _consume(df) -> None:
     df.write.format("noop").mode("overwrite").save()
 
-
-# The two documented O(N²) certification audit twins (SCALE.md's sf1
-# adjudication table): each certifies a bucketed production path (l42 →
-# l43's IVF ANN, l21 → l22's banded LSH CC) and carries a small-cohort
-# contract in its docstring. production_total excludes them (VERDICT r9
-# next-#4); tests/test_plans.py pins this set against the catalog.
-AUDIT_TWINS = frozenset({"l42_bitext_mining", "l21_dedup_clusters"})
 
 # A self-reported ambient above this is a loaded window: the run still
 # produces a full artifact, but it must not become the quiet reference
@@ -57,7 +53,9 @@ AUDIT_TWINS = frozenset({"l42_bitext_mining", "l21_dedup_clusters"})
 LOADED_AMBIENT_THRESHOLD = 1.15
 
 
-def compute_ambient(prev: dict | None, timings: dict[str, float], sf) -> dict:
+def compute_ambient(
+    prev: dict | None, timings: dict[str, float], context: dict
+) -> dict:
     """Self-normalizing ambient factors vs a previous artifact.
 
     Emits two estimators (VERDICT r10 next-#5):
@@ -74,9 +72,12 @@ def compute_ambient(prev: dict | None, timings: dict[str, float], sf) -> dict:
       normalization read 133.7 s vs a ~120 s true total). Use it for
       normalized TOTALS.
 
-    An artifact from a different SF is not an ambient reference.
+    An artifact taken in a different run context (cpus, host cores, sf,
+    shuffle partitions, pyspark version), or one that records no
+    context, is not an ambient reference: a 4-core run measured against
+    a 32-core table reads as "loaded" when it is only smaller.
     """
-    if not prev or prev.get("sf") != sf:
+    if not prev or prev.get("context") != context:
         return {}
     prev_q = prev.get("queries") or {}
     pairs = sorted(
@@ -183,6 +184,10 @@ def main() -> None:
     # operator cost.
     runs = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "2")))
     timings: dict[str, float] = {}
+    # Driver-side plan construction (the builder call: Python, py4j,
+    # Catalyst analysis, and any job a builder runs before returning)
+    # of the run whose total is reported; the rest is execution.
+    construct: dict[str, float] = {}
     for name in selected:
         best = None
         for _ in range(runs):
@@ -196,14 +201,18 @@ def main() -> None:
             # across the catalog sweep (ADVICE r4).
             spark.catalog.clearCache()
             start = time.perf_counter()
-            _consume(QUERIES[name](spark, sf_dir))
+            df = QUERIES[name](spark, sf_dir)
+            built = time.perf_counter()
+            _consume(df)
             elapsed = time.perf_counter() - start
-            best = elapsed if best is None else min(best, elapsed)
+            if best is None or elapsed < best:
+                best, best_construct = elapsed, built - start
         timings[name] = round(best, 4)
+        construct[name] = round(best_construct, 4)
 
     total = round(sum(timings.values()), 4)
     # production_total: the headline minus the documented audit twins
-    # (see AUDIT_TWINS above) — at sf1 they are 26% of the total for
+    # (plans/catalog.AUDIT_TWINS) — at sf1 they are 26% of the total for
     # queries a user would never run at scale; both stay in `queries`.
     production_total = round(
         sum(v for k, v in timings.items() if k not in AUDIT_TWINS), 4
@@ -221,7 +230,14 @@ def main() -> None:
             prev = json.loads(fh.read())
     except (OSError, ValueError):
         pass
-    ambient = compute_ambient(prev, timings, sf)
+    context = {
+        "cpus": int(cpus) if cpus.isdigit() else cpus,
+        "nproc": os.cpu_count(),
+        "sf": sf,
+        "shuffle_partitions": int(spark.conf.get("spark.sql.shuffle.partitions")),
+        "pyspark": pyspark.__version__,
+    }
+    ambient = compute_ambient(prev, timings, context)
 
     out_name, redirected = resolve_out_path(
         env_out, bool(query_filter), ambient.get("ambient_factor")
@@ -232,7 +248,9 @@ def main() -> None:
         "value": total,
         "unit": "sec",
         "queries": timings,
+        "construct_s": construct,
         "sf": sf,
+        "context": context,
         "production_total": production_total,
         "audit_twin_seconds": round(total - production_total, 4),
         **ambient,

@@ -46,6 +46,9 @@ def norm(pdf: pd.DataFrame) -> pd.DataFrame:
 
 
 def frames_match(sdf: pd.DataFrame, odf: pd.DataFrame) -> tuple[bool, str]:
+    """Compare a Spark result with its oracle: column set, row count,
+    then order-insensitive values (floats via isclose, rtol=atol=1e-9).
+    Returns (ok, why)."""
     if sorted(sdf.columns) != sorted(odf.columns):
         return False, f"columns spark={sorted(sdf.columns)} oracle={sorted(odf.columns)}"
     if len(sdf) != len(odf):
@@ -54,14 +57,32 @@ def frames_match(sdf: pd.DataFrame, odf: pd.DataFrame) -> tuple[bool, str]:
     a = sdf[cols].sort_values(cols, na_position="last").reset_index(drop=True)
     b = odf[cols].sort_values(cols, na_position="last").reset_index(drop=True)
     for c in cols:
-        if pd.api.types.is_float_dtype(a[c]) or pd.api.types.is_float_dtype(b[c]):
+        a_float = pd.api.types.is_float_dtype(a[c])
+        b_float = pd.api.types.is_float_dtype(b[c])
+        # The driver's gate hashes RENDERED values, so an int64 column
+        # against a float64 one ("5" vs "5.0") fails there even though
+        # isclose passes here (r2 l25: DuckDB HUGEINT -> float64).
+        # Numeric kinds must agree; CAST the oracle side.
+        if (a_float and pd.api.types.is_integer_dtype(b[c])) or (
+            b_float and pd.api.types.is_integer_dtype(a[c])
+        ):
+            return False, (
+                f"numeric kind differs in column {c}: "
+                f"spark={a[c].dtype} oracle={b[c].dtype}"
+            )
+        if a_float or b_float:
             av = a[c].astype(float).to_numpy()
             bv = b[c].astype(float).to_numpy()
-            ok = np.all((np.isnan(av) & np.isnan(bv)) | np.isclose(av, bv, rtol=1e-9, atol=1e-9))
+            bad = ~((np.isnan(av) & np.isnan(bv))
+                    | np.isclose(av, bv, rtol=1e-9, atol=1e-9))
         else:
-            ok = bool(((a[c].isna() & b[c].isna()) | (a[c].astype(object) == b[c].astype(object))).all())
-        if not ok:
-            return False, f"values differ in column {c}"
+            bad = ~((a[c].isna() & b[c].isna())
+                    | (a[c].astype(object) == b[c].astype(object))).to_numpy()
+        if bad.any():
+            return False, (
+                f"values differ in column {c}: {a[c][bad].head(5).tolist()} "
+                f"vs {b[c][bad].head(5).tolist()}"
+            )
     return True, ""
 
 

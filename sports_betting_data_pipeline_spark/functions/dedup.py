@@ -37,11 +37,6 @@ from sports_betting_data_pipeline_spark.functions.text import (
 # ---------------------------------------------------------------------------
 # Exact dedup
 # ---------------------------------------------------------------------------
-def exact_dedupe(df: DataFrame, subset: Sequence[str]) -> DataFrame:
-    """Keep one arbitrary row per distinct subset (dropDuplicates)."""
-    return df.dropDuplicates(list(subset))
-
-
 def exact_dedupe_canonical(
     df: DataFrame, key: str, subset: Sequence[str]
 ) -> DataFrame:
@@ -228,12 +223,6 @@ def minhash_signature_from_shingles(
             lambda a, b: F.least(a, b),
         ),
     )
-
-
-def minhash_signature(text: Column, k: int = 3, num_hashes: int = 32) -> Column:
-    """MinHash signature of a text column's k-shingles (one-pass fold,
-    see :func:`minhash_signature_from_shingles`)."""
-    return minhash_signature_from_shingles(shingles(text, k), num_hashes)
 
 
 def minhash_estimated_sim(sig_a: Column, sig_b: Column) -> Column:

@@ -333,10 +333,6 @@ def size_hint(df: DataFrame) -> int | None:
     return total
 
 
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: load_table(spark, sf_dir, name) for name in TABLES}
-
-
 def register_views(spark: SparkSession, sf_dir: str) -> None:
     """Register every fixture table as a temp view for spark.sql use."""
     for name in TABLES:

@@ -92,12 +92,6 @@ def bernoulli_sample(df: DataFrame, fraction: float, seed: int = 42) -> DataFram
     return df.sample(fraction=fraction, seed=seed)
 
 
-def random_topk(df: DataFrame, k: int, seed: int = 42) -> DataFrame:
-    """F7: pick up to k random rows (``random.choices(k=min(4, n))``,
-    mm_calls.py:333)."""
-    return df.orderBy(F.rand(seed)).limit(k)
-
-
 def topk_per_group(
     df: DataFrame,
     partition_by: Sequence[str],
@@ -178,15 +172,6 @@ def salted_join(
         "_salt", F.explode(F.array(*[F.lit(i) for i in range(buckets)]))
     )
     return salted_l.join(salted_r, on=[on, "_salt"], how=how).drop("_salt")
-
-
-def dedupe_exact(df: DataFrame, subset: Sequence[str] | None = None) -> DataFrame:
-    """Exact dedup: hash-shuffle on the subset columns, keep one row.
-
-    At 100 TB this is one shuffle on the dedup key; prefer listing the
-    minimal key subset so the shuffle payload stays narrow.
-    """
-    return df.dropDuplicates(list(subset) if subset else None)
 
 
 def stratified_sample(

@@ -47,6 +47,16 @@ ROWS_ONLY_SIBLINGS: dict[str, tuple[str, ...]] = {
     "st09_stream_neardup_filter": ("l30_incremental_neardup",),
 }
 
+# The documented O(N²) certification audit twins (SCALE.md's sf1
+# adjudication table), each mapped to the bucketed production query it
+# certifies. Each twin carries a small-cohort contract in its docstring;
+# bench.py's production_total excludes them, and tests/test_plans.py
+# pins both sides of this map against the catalog.
+AUDIT_TWINS: dict[str, str] = {
+    "l42_bitext_mining": "l43_bitext_mining_ann",
+    "l21_dedup_clusters": "l22_lsh_dedup_clusters",
+}
+
 
 # ---------------------------------------------------------------------------
 # JSON coercion contract (DuckDB spellings of the engine's JSON access

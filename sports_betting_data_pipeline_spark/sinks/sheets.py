@@ -277,14 +277,3 @@ class SpoolTransport:
             for item in batch:
                 fh.write(json.dumps(item, default=str) + "\n")
         os.replace(tmp, part)
-
-
-def cancel_merge(wagers: DataFrame, cancels: DataFrame) -> DataFrame:
-    """K4 as MERGE ... WHEN MATCHED DELETE semantics (see
-    operators/wagers.apply_cancellations; re-exported here so the sink
-    module presents the full K-surface)."""
-    from sports_betting_data_pipeline_spark.operators.wagers import (
-        apply_cancellations,
-    )
-
-    return apply_cancellations(wagers, cancels)

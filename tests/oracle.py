@@ -1,20 +1,27 @@
 """Local mirror of the driver's DuckDB-oracle differential check.
 
 Runs a catalog query on Spark and its oracle SQL on DuckDB over the
-same parquet fixtures, then compares row count, column set, and values
-(order-insensitive, float-tolerant) — the same gate shape the driver
-applies at sf0.01 (SURVEY.md §5).
+same parquet fixtures, then compares them with
+``scripts/verify_driver.py``'s ``norm`` / ``frames_match`` — the one
+comparison the driver-mimic gate, the fuzz harness and the benchmark
+checks also use (SURVEY.md §5).
 """
 
 from __future__ import annotations
 
-import datetime
+import os
+import sys
 
 import duckdb
-import numpy as np
 import pandas as pd
 
 from sports_betting_data_pipeline_spark.io import TABLES, table_path
+
+_SCRIPTS = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "scripts")
+if _SCRIPTS not in sys.path:
+    sys.path.insert(0, _SCRIPTS)
+
+from verify_driver import frames_match, norm  # noqa: E402
 
 
 def run_oracle(sql: str, sf_dir: str) -> pd.DataFrame:
@@ -26,68 +33,6 @@ def run_oracle(sql: str, sf_dir: str) -> pd.DataFrame:
     return con.execute(sql).fetch_df()
 
 
-def _normalize(pdf: pd.DataFrame) -> pd.DataFrame:
-    out = pdf.copy()
-    for col in out.columns:
-        series = out[col]
-        if isinstance(series.dtype, pd.DatetimeTZDtype):
-            out[col] = series.dt.tz_convert("UTC").dt.tz_localize(None)
-        elif series.dtype == object and len(series) > 0:
-            sample = series.dropna()
-            if len(sample) > 0 and isinstance(
-                sample.iloc[0], (datetime.date, datetime.datetime)
-            ):
-                out[col] = pd.to_datetime(series)
-        if pd.api.types.is_datetime64_any_dtype(out[col].dtype):
-            out[col] = out[col].astype("datetime64[us]")
-    return out
-
-
-def assert_frames_match(spark_df, oracle_pdf: pd.DataFrame, float_rtol: float = 1e-9):
-    spark_pdf = _normalize(spark_df.toPandas())
-    oracle_pdf = _normalize(oracle_pdf)
-
-    assert sorted(spark_pdf.columns) == sorted(oracle_pdf.columns), (
-        f"column mismatch: spark={sorted(spark_pdf.columns)} "
-        f"oracle={sorted(oracle_pdf.columns)}"
-    )
-    assert len(spark_pdf) == len(oracle_pdf), (
-        f"row count mismatch: spark={len(spark_pdf)} oracle={len(oracle_pdf)}"
-    )
-
-    cols = sorted(spark_pdf.columns)
-    a = spark_pdf[cols].sort_values(cols, na_position="last").reset_index(drop=True)
-    b = oracle_pdf[cols].sort_values(cols, na_position="last").reset_index(drop=True)
-
-    for col in cols:
-        av, bv = a[col], b[col]
-        # The driver's gate hashes RENDERED values, so an int64 Spark
-        # column vs a float64 oracle column ("5" vs "5.0") fails there
-        # even though isclose passes here (r2 l25: DuckDB HUGEINT →
-        # float64). Mirror that strictness: numeric kinds must agree.
-        a_float = pd.api.types.is_float_dtype(av)
-        b_float = pd.api.types.is_float_dtype(bv)
-        a_int = pd.api.types.is_integer_dtype(av)
-        b_int = pd.api.types.is_integer_dtype(bv)
-        assert not (a_float and b_int) and not (a_int and b_float), (
-            f"numeric-kind mismatch in {col}: spark={av.dtype} vs "
-            f"oracle={bv.dtype} — the driver's value hash renders these "
-            f"differently (e.g. '5' vs '5.0'); CAST the oracle side"
-        )
-        if a_float or b_float:
-            af = av.astype(float).to_numpy()
-            bf = bv.astype(float).to_numpy()
-            both_nan = np.isnan(af) & np.isnan(bf)
-            close = np.isclose(af, bf, rtol=float_rtol, atol=1e-9)
-            assert bool(np.all(both_nan | close)), (
-                f"float mismatch in {col}: "
-                f"{af[~(both_nan | close)][:5]} vs {bf[~(both_nan | close)][:5]}"
-            )
-        else:
-            mismatch = ~(
-                (av.isna() & bv.isna()) | (av.astype(object) == bv.astype(object))
-            )
-            assert not mismatch.any(), (
-                f"value mismatch in {col}: "
-                f"{av[mismatch].head(5).tolist()} vs {bv[mismatch].head(5).tolist()}"
-            )
+def assert_frames_match(spark_df, oracle_pdf: pd.DataFrame) -> None:
+    ok, why = frames_match(norm(spark_df.toPandas()), norm(oracle_pdf))
+    assert ok, why

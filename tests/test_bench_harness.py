@@ -34,15 +34,19 @@ def _load_bench():
 
 bench = _load_bench()
 
+# the run context of every ambient case below unless it says otherwise
+CTX = {"cpus": 4, "nproc": 4, "sf": 0.1, "shuffle_partitions": 4,
+       "pyspark": "4.1.2"}
+
 
 # ---------------------------------------------------------------- ambient
 
 
 def test_ambient_median_and_weighted_agree_when_uniform():
-    prev = {"sf": 0.1, "value": 10.0,
+    prev = {"context": CTX, "value": 10.0,
             "queries": {f"q{i}": 1.0 for i in range(20)}}
     timings = {f"q{i}": 1.2 for i in range(20)}
-    amb = bench.compute_ambient(prev, timings, 0.1)
+    amb = bench.compute_ambient(prev, timings, CTX)
     assert amb["ambient_factor"] == pytest.approx(1.2)
     assert amb["ambient_factor_weighted"] == pytest.approx(1.2)
     assert amb["ambient_n"] == 20
@@ -56,10 +60,10 @@ def test_ambient_weighted_tracks_tail_drag_median_misses():
     estimator must sit well above the median in that regime."""
     prev_q = {f"s{i}": 0.1 for i in range(20)}   # short queries
     prev_q.update({f"L{i}": 5.0 for i in range(4)})  # long queries
-    prev = {"sf": 0.1, "value": sum(prev_q.values()), "queries": prev_q}
+    prev = {"context": CTX, "value": sum(prev_q.values()), "queries": prev_q}
     timings = {k: v * (1.1 if k.startswith("s") else 2.0)
                for k, v in prev_q.items()}
-    amb = bench.compute_ambient(prev, timings, 0.1)
+    amb = bench.compute_ambient(prev, timings, CTX)
     assert amb["ambient_factor"] == pytest.approx(1.1, abs=0.01)
     # true total ratio = (20*0.11 + 4*10.0) / 22.0 ≈ 1.92; the trimmed
     # weighted estimator must land near it, not near the median
@@ -71,19 +75,36 @@ def test_ambient_weighted_trims_outlier_ratios():
     must not poison the weighted ambient: with n>=10 the single
     highest- and lowest-ratio queries are trimmed before the sums."""
     prev_q = {f"q{i}": 1.0 for i in range(12)}
-    prev = {"sf": 0.1, "value": 12.0, "queries": prev_q}
+    prev = {"context": CTX, "value": 12.0, "queries": prev_q}
     timings = {k: 1.0 for k in prev_q}
     timings["q0"] = 30.0   # touched query, not ambient
     timings["q1"] = 0.01   # touched query, not ambient
-    amb = bench.compute_ambient(prev, timings, 0.1)
+    amb = bench.compute_ambient(prev, timings, CTX)
     assert amb["ambient_factor_weighted"] == pytest.approx(1.0, abs=0.01)
 
 
 def test_ambient_refuses_cross_sf_reference():
-    prev = {"sf": 1.0, "value": 10.0, "queries": {"q0": 1.0}}
-    assert bench.compute_ambient(prev, {"q0": 2.0}, 0.1) == {}
-    assert bench.compute_ambient(None, {"q0": 2.0}, 0.1) == {}
-    assert bench.compute_ambient({"sf": 0.1, "queries": {}}, {"q0": 2.0}, 0.1) == {}
+    prev = {"context": {**CTX, "sf": 1.0}, "value": 10.0, "queries": {"q0": 1.0}}
+    assert bench.compute_ambient(prev, {"q0": 2.0}, CTX) == {}
+    assert bench.compute_ambient(None, {"q0": 2.0}, CTX) == {}
+    assert bench.compute_ambient({"context": CTX, "queries": {}}, {"q0": 2.0}, CTX) == {}
+
+
+def test_ambient_refuses_cross_cpus_reference():
+    """A 4-core run against a 32-core table is smaller, not loaded: the
+    reference must be refused, as must one that records no context at
+    all (every artifact written before the context block existed)."""
+    timings = {"q0": 2.0}
+    prev = {"context": {**CTX, "cpus": 32, "nproc": 32}, "value": 1.0,
+            "queries": {"q0": 1.0}}
+    assert bench.compute_ambient(prev, timings, CTX) == {}
+    legacy = {"sf": 0.1, "value": 1.0, "queries": {"q0": 1.0}}
+    assert bench.compute_ambient(legacy, timings, CTX) == {}
+    for key in CTX:
+        other = {**CTX, key: "different"}
+        assert bench.compute_ambient({**prev, "context": other}, timings, CTX) == {}
+    assert bench.compute_ambient({**prev, "context": CTX}, timings, CTX)[
+        "ambient_factor"] == pytest.approx(2.0)
 
 
 # ------------------------------------------------------------- out path
@@ -175,6 +196,15 @@ def test_bench_smoke_last_stdout_line_parses(tmp_path):
         assert set(full["queries"]) == {
             "q01_pricing_summary", "f01_whitelist_filter",
             "a01_global_counts"}
+        # construction seconds of the reported run, one per timed query
+        assert set(full["construct_s"]) == set(full["queries"])
+        for q, total in full["queries"].items():
+            assert 0 <= full["construct_s"][q] <= total
+        ctx = full["context"]
+        assert ctx["cpus"] == 4 and ctx["sf"] == 0.001
+        assert ctx["nproc"] == os.cpu_count()
+        assert ctx["shuffle_partitions"] == 4
+        assert isinstance(ctx["pyspark"], str) and ctx["pyspark"]
         on_disk = json.loads(open(artifact).read())
         assert on_disk == full
     finally:

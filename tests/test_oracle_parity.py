@@ -7,7 +7,7 @@ from __future__ import annotations
 import pytest
 
 from sports_betting_data_pipeline_spark.plans import ORACLES, QUERIES
-from tests.oracle import assert_frames_match, run_oracle
+from tests.oracle import assert_frames_match, frames_match, run_oracle
 
 
 @pytest.mark.parametrize("name", sorted(ORACLES))
@@ -24,6 +24,21 @@ def test_rows_only_queries_run(spark, sf_dir, name):
     assert df.columns, f"{name} returned no columns"
     assert df.count() >= 0
 
+
+def test_frames_match_refuses_int_vs_float():
+    """The driver hashes rendered values, so an int64 column against a
+    float64 one ("5" vs "5.0") is a mismatch even when every value is
+    numerically equal; the shared comparison must refuse it both ways
+    round, and still accept equal kinds."""
+    import pandas as pd
+
+    ints = pd.DataFrame({"k": [1, 2], "v": [5, 6]})
+    floats = pd.DataFrame({"k": [1, 2], "v": [5.0, 6.0]})
+    for a, b in ((ints, floats), (floats, ints)):
+        ok, why = frames_match(a, b)
+        assert not ok and "numeric kind" in why and "v" in why
+    assert frames_match(ints, ints.iloc[::-1]) == (True, "")
+    assert frames_match(floats, floats.assign(v=floats.v + 1e-12)) == (True, "")
 
 def test_l25_pinned_values_sf001(spark):
     """Pin l25_sequence_packing's exact per-row output at the driver's

@@ -743,28 +743,16 @@ def test_sf1_fixture_replication_keeps_fk_fanout(spark):
 def test_bench_audit_twins_exist_and_have_production_siblings():
     """bench.py's production_total excludes AUDIT_TWINS; if a twin is
     renamed or dropped from the catalog the subtotal silently becomes
-    the headline. Pin the set to live catalog names, and pin that each
+    the headline. Pin the twins to live catalog names, and pin that each
     twin's docstring declares its audit/small-cohort contract and its
     bucketed production sibling is still registered."""
-    import importlib.util
-    import os
-
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    spec = importlib.util.spec_from_file_location(
-        "bench", os.path.join(repo, "bench.py")
-    )
-    bench = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(bench)
-
     from sports_betting_data_pipeline_spark.plans import QUERIES
+    from sports_betting_data_pipeline_spark.plans.catalog import AUDIT_TWINS
 
-    assert bench.AUDIT_TWINS <= set(QUERIES), (
-        f"AUDIT_TWINS not in catalog: {bench.AUDIT_TWINS - set(QUERIES)}"
+    assert set(AUDIT_TWINS) <= set(QUERIES), (
+        f"AUDIT_TWINS not in catalog: {set(AUDIT_TWINS) - set(QUERIES)}"
     )
-    siblings = {"l42_bitext_mining": "l43_bitext_mining_ann",
-                "l21_dedup_clusters": "l22_lsh_dedup_clusters"}
-    assert set(siblings) == set(bench.AUDIT_TWINS)
-    for twin, prod in siblings.items():
+    for twin, prod in AUDIT_TWINS.items():
         assert prod in QUERIES, f"production sibling {prod} missing"
         doc = (QUERIES[twin].__doc__ or "").lower()
         assert "audit" in doc or "small" in doc, (

@@ -32,22 +32,30 @@ def _cached_rdd_blocks(spark) -> int:
     return sum(info.numCachedPartitions() for info in infos)
 
 
+def _cached_rdd_ids(spark) -> set[int]:
+    infos = spark.sparkContext._jsc.sc().getRDDStorageInfo()
+    return {info.id() for info in infos if info.numCachedPartitions() > 0}
+
+
 def test_clear_cache_between_queries_leaves_no_blocks(spark, sf_dir):
-    # Delta-based: the session-scoped spark fixture may carry
-    # localCheckpoint blocks from EARLIER tests (clearCache does not
-    # drop checkpoint blocks; they free via GC/ContextCleaner on their
-    # own schedule), so assert that running these queries adds nothing
-    # that survives clearCache, not that the absolute count is zero.
+    # The session-scoped spark fixture may carry localCheckpoint blocks
+    # from EARLIER tests (clearCache does not drop checkpoint blocks;
+    # they free via GC/ContextCleaner on their own schedule), so the
+    # check is on RDDs made during this loop: none of them may keep a
+    # cached block past clearCache(). Reserving an id first puts every
+    # RDD the loop makes above that watermark.
     spark.catalog.clearCache()
-    baseline = _cached_rdd_blocks(spark)
+    watermark = spark.sparkContext._jsc.sc().newRddId()
     for name in CACHE_HEAVY:
         assert name in QUERIES, f"{name} left the catalog; update CACHE_HEAVY"
         QUERIES[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
         # at least one query must actually materialize a cache, or this
-        # test is vacuous — checked over the whole loop below
+        # test is vacuous — checked by test_cache_heavy_queries_do_cache
         spark.catalog.clearCache()
-        assert _cached_rdd_blocks(spark) <= baseline, (
-            f"cached blocks survived clearCache() after {name}"
+        survivors = {i for i in _cached_rdd_ids(spark) if i > watermark}
+        assert not survivors, (
+            f"RDDs {sorted(survivors)} kept cached blocks past clearCache() "
+            f"after {name}"
         )
 
 
